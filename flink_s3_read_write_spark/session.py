@@ -14,6 +14,25 @@ equivalent is a ``SparkSession`` configured once.  Scale posture:
 - S3A settings are applied only when requested: on a real deployment
   the magic committer removes the rename bottleneck on S3 writes,
   which is the single biggest S3-write scale trap.
+- Streaming checkpoints on a local or HDFS path go through Hadoop's
+  ``FileSystem`` API (``FileSystemBasedCheckpointFileManager``), not
+  Spark's default ``FileContext`` one.  Without the native libhadoop,
+  Hadoop's local file system forks shell commands for permissions,
+  and ``FileContext`` pays that on every offset, commit and state
+  file: a 200-key state commit took about 0.5 s.  The ``FileSystem``
+  manager writes a temp file, checks that the target does not exist
+  and renames it: the same guarantee as local ``FileContext``, and
+  like it no guard against two drivers sharing one checkpoint.  The
+  ``s3=True`` profile keeps Spark's default, whose atomicity on an
+  object store is the store's to give.
+- On a ``local[...]`` master, file listing runs at most ``cpus`` tasks
+  (``parallelPartitionDiscovery.parallelism``).  A file-source
+  micro-batch re-lists its own new files, and above 32 of them Spark
+  lists them in a job with one task per file: 150 tasks for a
+  150-file burst on 4 cores.  A cluster master keeps Spark's default
+  so that listing at 100 TB stays spread over the executors.
+- The local driver heap defaults to min(48g, 3/4 of physical memory);
+  ``$SPARK_DRIVER_MEM`` overrides it.
 """
 
 from __future__ import annotations
@@ -47,6 +66,59 @@ _S3A_CONF = {
 }
 
 
+_CHECKPOINT_FILE_MANAGER = (
+    "org.apache.spark.sql.execution.streaming.checkpointing."
+    "FileSystemBasedCheckpointFileManager"
+)
+
+
+def default_driver_memory() -> str:
+    """min(48g, 3/4 of the machine's physical memory), in MiB."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys * 3 // 4 >> 20)}m"
+
+
+def session_conf(
+    *,
+    cpus: int | None = None,
+    shuffle_partitions: int | None = None,
+    s3: bool = False,
+) -> dict[str, str]:
+    """The settings ``build_session`` applies before ``extra_conf``.
+
+    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores.
+    ``$SPARK_MASTER``, when set, is the master (a cluster manager);
+    otherwise the session runs on ``local[cpus]``.
+    """
+    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    conf = {
+        "spark.sql.shuffle.partitions": str(shuffle_partitions or cpus),
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.parquet.aggregatePushdown": "true",
+        "spark.serializer": "org.apache.spark.serializer.KryoSerializer",
+        "spark.ui.enabled": os.environ.get("SPARK_UI", "false"),
+    }
+    # Only set local resources when not launched under a cluster manager.
+    if "SPARK_MASTER" in os.environ:
+        conf["spark.master"] = os.environ["SPARK_MASTER"]
+    else:
+        conf["spark.master"] = f"local[{cpus}]"
+        conf["spark.driver.memory"] = (
+            os.environ.get("SPARK_DRIVER_MEM") or default_driver_memory()
+        )
+    if conf["spark.master"].startswith("local"):
+        conf["spark.sql.sources.parallelPartitionDiscovery.parallelism"] = str(cpus)
+    if s3:
+        conf.update(_S3A_CONF)
+    else:
+        conf["spark.sql.streaming.checkpointFileManagerClass"] = _CHECKPOINT_FILE_MANAGER
+    return conf
+
+
 def build_session(
     app_name: str = "flink_s3_read_write_spark",
     *,
@@ -55,39 +127,16 @@ def build_session(
     s3: bool = False,
     extra_conf: dict[str, str] | None = None,
 ) -> SparkSession:
-    """Create (or fetch) the engine's SparkSession.
+    """Create (or fetch) the engine's SparkSession with
+    ``session_conf`` and then ``extra_conf``.
 
-    ``cpus`` defaults to ``$SPARK_GRAFT_CPUS`` or all local cores.
     On a cluster, the caller supplies master/deploy config externally
-    (spark-submit); everything here is master-agnostic except the
-    local[] fallback.
+    (spark-submit, ``$SPARK_MASTER``); everything here is
+    master-agnostic except the local[] fallback.
     """
-    cpus = cpus or int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
-    shuffle_partitions = shuffle_partitions or cpus
-
-    builder = (
-        SparkSession.builder.appName(app_name)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.parquet.aggregatePushdown", "true")
-        .config("spark.serializer", "org.apache.spark.serializer.KryoSerializer")
-        .config("spark.ui.enabled", os.environ.get("SPARK_UI", "false"))
-    )
-    # Only set master when not already launched under a cluster manager.
-    if "SPARK_MASTER" in os.environ:
-        builder = builder.master(os.environ["SPARK_MASTER"])
-    else:
-        builder = builder.master(f"local[{cpus}]").config(
-            "spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g")
-        )
-    if s3:
-        for k, v in _S3A_CONF.items():
-            builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
+    builder = SparkSession.builder.appName(app_name)
+    conf = session_conf(cpus=cpus, shuffle_partitions=shuffle_partitions, s3=s3)
+    for k, v in {**conf, **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

@@ -35,6 +35,7 @@ at-most-once on restart (SURVEY.md §2.2).
 
 from __future__ import annotations
 
+from py4j.protocol import Py4JError, Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -356,6 +357,36 @@ _JDBC_TYPES = {
 }
 
 
+def _sql_state(e: Py4JJavaError) -> str | None:
+    """The SQLState of a JDBC error raised through py4j; None when the
+    Java exception is not a ``java.sql.SQLException``."""
+    try:
+        return e.java_exception.getSQLState()
+    except Py4JError:
+        return None
+
+
+def _create_sink_tables(conn, table: str, schema: list[tuple[str, str]],
+                        key_cols: list[str]) -> None:
+    """Create the upsert target and its epochs ledger if absent (Derby
+    has no IF NOT EXISTS; SQLState X0Y32, object already exists, is
+    swallowed)."""
+    cols = ", ".join(f"{c} {_JDBC_TYPES[t]}" for c, t in schema)
+    pk = ", ".join(key_cols)
+    for ddl in (
+        f"CREATE TABLE {table} ({cols}, PRIMARY KEY ({pk}))",
+        f"CREATE TABLE {table}_EPOCHS (batch_id BIGINT PRIMARY KEY)",
+    ):
+        st = conn.createStatement()
+        try:
+            st.executeUpdate(ddl)
+        except Py4JJavaError as e:
+            if _sql_state(e) != "X0Y32":
+                raise
+        finally:
+            st.close()
+
+
 def jdbc_upsert_writer(
     url: str,
     table: str,
@@ -375,7 +406,9 @@ def jdbc_upsert_writer(
     1. the batch lands DISTRIBUTED into a staging table
        (``<table>_STAGE``, overwritten — re-runnable by construction;
        each executor task writes its own partition, so the wide work
-       never funnels through the driver);
+       never funnels through the driver).  A writer's first batch
+       drops and re-creates the stage; later ones truncate it, and
+       the target and ledger DDL runs once per writer;
     2. ONE driver-side transaction then (a) inserts ``batch_id`` into
        the ``<table>_EPOCHS`` ledger, whose PRIMARY KEY makes a
        replayed batch fail the insert and skip cleanly, and (b) runs
@@ -394,40 +427,29 @@ def jdbc_upsert_writer(
     from flink_s3_read_write_spark.sources.io import write_jdbc
 
     stage = f"{table}_STAGE"
+    # Per-writer DDL state.  The first batch re-creates the stage, whose
+    # schema may have changed since an earlier writer; later batches of
+    # this writer share the schema and only empty it.
+    tables_ready = stage_ready = False
 
     def _connect(spark: SparkSession):
         jvm = spark.sparkContext._jvm  # noqa: SLF001
         return jvm.java.sql.DriverManager.getConnection(url)
 
-    def ensure_target(spark: SparkSession, schema: list[tuple[str, str]]) -> None:
-        """Create target + epochs ledger if absent (Derby has no IF
-        NOT EXISTS; existing-object errors are swallowed by state)."""
-        cols = ", ".join(f"{c} {_JDBC_TYPES[t]}" for c, t in schema)
-        pk = ", ".join(key_cols)
-        conn = _connect(spark)
-        try:
-            for ddl in (
-                f"CREATE TABLE {table} ({cols}, PRIMARY KEY ({pk}))",
-                f"CREATE TABLE {table}_EPOCHS (batch_id BIGINT PRIMARY KEY)",
-            ):
-                st = conn.createStatement()
-                try:
-                    st.executeUpdate(ddl)
-                except Exception as e:  # noqa: BLE001
-                    if "X0Y32" not in str(e):  # object already exists
-                        raise
-                finally:
-                    st.close()
-        finally:
-            conn.close()
-
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        nonlocal tables_ready, stage_ready
         spark = batch_df.sparkSession
         schema = [(c, t) for c, t in batch_df.dtypes]
         bad = [f"{c}:{t}" for c, t in schema if t not in _JDBC_TYPES]
         if bad:
             raise TypeError(f"jdbc_upsert_writer: unmapped column types {bad}")
-        ensure_target(spark, schema)
+        if not tables_ready:
+            conn = _connect(spark)
+            try:
+                _create_sink_tables(conn, table, schema, key_cols)
+            finally:
+                conn.close()
+            tables_ready = True
         # Leg 1 — distributed, re-runnable: stage the batch.  Pin the
         # staging column types: Spark's Derby dialect maps StringType
         # to CLOB, which Derby refuses to equality-compare in the
@@ -436,8 +458,11 @@ def jdbc_upsert_writer(
         stage_props["createTableColumnTypes"] = ", ".join(
             f"{c} {_JDBC_TYPES[t]}" for c, t in schema
         )
+        if stage_ready:
+            stage_props["truncate"] = "true"
         write_jdbc(batch_df, url, stage, mode="overwrite",
                    properties=stage_props)
+        stage_ready = True
         # Leg 2 — one atomic driver transaction: ledger + MERGE.
         non_keys = [c for c, _ in schema if c not in key_cols]
         # Stage columns must be double-quoted: Spark's JDBC writer
@@ -462,12 +487,12 @@ def jdbc_upsert_writer(
                     st.executeUpdate(
                         f"INSERT INTO {table}_EPOCHS (batch_id) VALUES ({int(batch_id)})"
                     )
-                except Exception as e:  # noqa: BLE001
+                except Py4JJavaError as e:
                     # Duplicate epoch (SQLState 23505): this batch
                     # already committed — a checkpoint-replay
                     # redelivery.  Skip without touching the table.
                     conn.rollback()
-                    if "23505" in str(e):
+                    if _sql_state(e) == "23505":
                         return
                     raise
                 st.executeUpdate(merge)

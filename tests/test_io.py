@@ -455,6 +455,72 @@ def test_jdbc_upsert_idempotence_property(spark, tmp_path):
     assert got == expect
 
 
+def _derby_table_id(spark, url, name):
+    conn = spark.sparkContext._jvm.java.sql.DriverManager.getConnection(url)
+    try:
+        rs = conn.createStatement().executeQuery(
+            f"SELECT TABLEID FROM SYS.SYSTABLES WHERE TABLENAME = '{name}'")
+        return rs.getString(1) if rs.next() else None
+    finally:
+        conn.close()
+
+
+def test_jdbc_upsert_writer_ddl_once_per_writer(spark, tmp_path, monkeypatch):
+    """A writer creates its target and ledger on its first batch only,
+    and later batches empty the stage in place (same TABLEID) instead
+    of dropping and re-creating it.  A new writer re-creates the stage."""
+    url = f"jdbc:derby:{tmp_path}/ddldb;create=true"
+    props = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
+    creates = []
+    real = jobs._create_sink_tables
+
+    def counted(conn, table, *rest):
+        creates.append(table)
+        real(conn, table, *rest)
+
+    monkeypatch.setattr(jobs, "_create_sink_tables", counted)
+    handler = jobs.jdbc_upsert_writer(url, "DDL", ["k"], properties=props)
+    stage_ids = []
+    for batch_id, rows in enumerate([[("a", 1)], [("a", 2), ("b", 3)], [("c", 4)]]):
+        handler(spark.createDataFrame(rows, "k string, total bigint"), batch_id)
+        stage_ids.append(_derby_table_id(spark, url, "DDL_STAGE"))
+    assert creates == ["DDL"]
+    assert stage_ids[0] is not None and len(set(stage_ids)) == 1
+    assert _derby_rows(spark, url, "DDL", props) == {"a": (2,), "b": (3,), "c": (4,)}
+
+    jobs.jdbc_upsert_writer(url, "DDL", ["k"], properties=props)(
+        spark.createDataFrame([("d", 5)], "k string, total bigint"), 3)
+    assert creates == ["DDL", "DDL"]
+    assert _derby_table_id(spark, url, "DDL_STAGE") not in (None, stage_ids[0])
+    assert _derby_rows(spark, url, "DDL", props)["d"] == (5,)
+
+
+def test_jdbc_sink_drain_tasks_capped_at_local_cores(spark, tmp_path):
+    """A 40-file availableNow drain into the JDBC sink launches no stage
+    with more tasks than local cores: above 32 files the file source
+    lists a batch's files in a Spark job, capped by
+    ``parallelPartitionDiscovery.parallelism`` on a local master."""
+    url = f"jdbc:derby:{tmp_path}/drain40db;create=true"
+    props = {"driver": "org.apache.derby.iapi.jdbc.AutoloadedDriver"}
+    src = tmp_path / "src"
+    src.mkdir()
+    for i in range(40):
+        (src / f"part-{i:02d}.csv").write_text(f"k{i % 5},{i}\n")
+    updates = (spark.readStream.schema("k string, v bigint").csv(str(src))
+               .groupBy("k").agg(F.sum("v").alias("total")))
+    q = jobs.start_jdbc_upsert_sink(updates, url, "DRAIN40", ["k"],
+                                    str(tmp_path / "ckpt"), properties=props)
+    assert q.awaitTermination(120)
+    tracker = spark.sparkContext.statusTracker()
+    stages = [tracker.getStageInfo(sid)
+              for jid in tracker.getJobIdsForGroup(str(q.runId))
+              for sid in tracker.getJobInfo(jid).stageIds]
+    tasks = [st.numTasks for st in stages if st is not None]
+    assert tasks and max(tasks) <= spark.sparkContext.defaultParallelism, tasks
+    assert _derby_rows(spark, url, "DRAIN40", props) == {
+        f"k{j}": (sum(range(j, 40, 5)),) for j in range(5)}
+
+
 def test_fan_out_guard(spark):
     """fan_out: under-split inputs get repartitioned to the session
     default parallelism; inputs already at/above it are returned with

@@ -548,15 +548,16 @@ def test_stream_bench_smoke(spark, tmp_path, monkeypatch):
     """tools/stream_bench.py end-to-end on a tiny input: all three jobs
     report positive rows/sec and the sidecar JSON is written."""
     import json
+    import os
     import subprocess
     import sys
 
-    env = dict(**__import__("os").environ, SPARK_GRAFT_CPUS="4")
+    env = {**os.environ, "SPARK_GRAFT_CPUS": "4"}
     out = subprocess.run(
         [sys.executable, "tools/stream_bench.py", "--lines", "20000",
          "--files", "2", "--repeat", "1", "--out", str(tmp_path / "sb.json")],
         capture_output=True, text=True, env=env, timeout=300,
-        cwd="/root/repo",
+        cwd=os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
     )
     assert out.returncode == 0, out.stderr[-2000:]
     line = json.loads(out.stdout.strip().splitlines()[-1])
