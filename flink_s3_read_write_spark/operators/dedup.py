@@ -371,52 +371,6 @@ def minhash_signatures_numpy(
     return hashed.mapInPandas(batches, f"{id_col} long, minhash array<bigint>")
 
 
-def _split_over_cap(
-    banded: DataFrame, keys: list[str], id_col: str, max_bucket: int,
-) -> tuple[DataFrame, DataFrame]:
-    """Split ``banded`` (one row per (bucket-key, id)) into under-cap
-    rows and over-cap rows with ONE shuffle.
-
-    The bucket size is a full-frame ``count`` over the SAME
-    (keys, id)-sorted window the ring leads run on, so the whole split
-    + ring computation is a single Exchange on the bucket key followed
-    by one sort — the expensive pipeline UPSTREAM of the exchange
-    (tokenize → shingle → signatures → banding) is computed once and
-    the two branch subtrees dedupe through ReusedExchange (verified
-    in the executed adaptive plan: 1 ReusedExchange).  The
-    count-preagg + semi/anti-join formulation this replaces carried
-    the signature pipeline in THREE subtrees (count aggregate, semi
-    probe, anti probe) with no exchange reuse in its plan — ~10-15%
-    steady-state wall on q208 at gate SF and, more importantly, a
-    duplication that grows with corpus cost once the shared shingle
-    cache is cold.  No over-cap bucket ever materializes an array:
-    only (key, id[, payload]) rows are shuffled, never signatures.
-
-    Skew profile (ADVICE r13 — be honest about the pathological
-    input this feature targets): the unbounded-both-sides count frame
-    buffers the ENTIRE bucket partition in the window operator's row
-    buffer before emitting — a spillable UnsafeExternalSorter array,
-    NOT O(1) state — and a degenerate over-cap bucket sorts in a
-    single task.  The guarantee is therefore "one task holds
-    O(bucket) small (key, id) rows, spilling to disk past the page
-    budget", not constant memory; acceptable because the rows carry
-    no signature arrays, but a future 10^9-row single bucket would
-    serialize through one core.
-    """
-    from pyspark.sql import Window
-
-    w = (
-        Window.partitionBy(*keys)
-        .orderBy(F.col(id_col))
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    wn = banded.withColumn("_n", F.count(F.lit(1)).over(w))
-    return (
-        wn.filter(F.col("_n") <= max_bucket).drop("_n"),
-        wn.filter(F.col("_n") > max_bucket).drop("_n"),
-    )
-
-
 def _resolve_over_cap(over_cap: str | None,
                       cap_bucket_prepass: bool = False) -> str:
     """Resolve the ``over_cap=None`` sentinel default (ADVICE r14).
@@ -453,8 +407,9 @@ def _check_over_cap(
     if over_cap not in ("drop", "ring"):
         raise ValueError(f"over_cap must be 'drop' or 'ring', got {over_cap!r}")
     if over_cap == "ring" and star_k < 1:
-        # star_k=0 would drop the star entirely and re-open the
-        # bounded-round CC stall (diameter n/ring_c).
+        # star_k=0 would drop the star entirely: the bucket's pair
+        # graph becomes a chain of diameter n/ring_c, which one run of
+        # ring_c verify-rejected neighbors splits.
         raise ValueError(f"star_k must be >= 1, got {star_k}")
     if over_cap == "ring" and ring_c < 1:
         # ring_c=0 would silently degrade to star-only pairing and
@@ -473,10 +428,18 @@ def _check_over_cap(
 
 
 def _ring_pairs(
-    over_rows: DataFrame, keys: list[str], id_col: str, ring_c: int,
-    payload: str | None = None, star_k: int = 1,
+    rows: DataFrame, keys: list[str], id_col: str, ring_c: int,
+    payload: str | None = None, star_k: int = 1, max_bucket: int = 0,
 ) -> DataFrame:
-    """RING+STAR candidate pairs of the over-cap buckets.
+    """Candidate pairs of LSH buckets: the RING+STAR pairs of each
+    bucket of more than ``max_bucket`` ids (default 0: every bucket),
+    and every pair of each other bucket.
+
+    ``rows`` holds one row per (bucket key, id).  Both kinds of pairs
+    come from one window pass: one Exchange on the bucket key and one
+    sort, so the signature pipeline upstream runs once.  Two branches
+    (under-cap and over-cap rows) would each recompute that pipeline:
+    the planner reuses no exchange between them.
 
     ``star_k`` (r14) widens the star: each doc pairs with the
     bucket's ``star_k`` SMALLEST ids instead of just the minimum.
@@ -499,66 +462,79 @@ def _ring_pairs(
     ``ring_c`` successors in ascending-id order (ring — local
     robustness: one verify-rejected doc only breaks the chain at that
     point) and (b) the bucket's MIN id (star).  O(n·(ring_c+1)) pairs
-    instead of O(n²), and the star edges matter for the DOWNSTREAM
-    pass: a pure ring gives the bucket's pair graph diameter n/ring_c,
-    which ``connected_components``' bounded-round min-label
-    propagation cannot traverse (measured: a 60-doc chain stalled at
-    41 members after the default 20 rounds), while the star keeps
-    diameter ≤ 2 so the full duplicate cluster labels in O(1) rounds.
+    instead of O(n²).  A pure ring gives the bucket's pair graph
+    diameter n/ring_c, which one run of ring_c verify-rejected
+    neighbors splits; the star keeps it at diameter ≤ 2.
 
     The ONE implementation of the topology — MinHash and SimHash both
     call it (review r13).  ``payload`` optionally names a column to
     ride along through the window: the output then also carries
     (``pa``, ``pb``) — each side's payload — so an in-row verify
     (SimHash Hamming) needs no re-join.  Returns (id_a < id_b) rows.
+
+    Memory: the bucket size is a count over the whole window frame,
+    which buffers the bucket's partition in the window operator's
+    spillable row buffer (small (key, id[, payload]) rows, never
+    signatures), and a degenerate bucket sorts in a single task.  The
+    members are collected only where that count is at most
+    ``max_bucket``; an over-cap bucket collects an empty array, so no
+    over-cap bucket is ever materialized as an array.
     """
     from pyspark.sql import Window
 
-    w = Window.partitionBy(*keys).orderBy(F.col(id_col))
+    # Rename first, so every window below orders by the same column
+    # and the planner sorts once.
+    pl = payload is not None
+    base = rows.select(*keys, F.col(id_col).alias("_id"),
+                       *([F.col(payload).alias("_p")] if pl else []))
+    w = Window.partitionBy(*keys).orderBy("_id")
+    whole = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
     # first()/lead() over the ascending-ordered window (default
     # running frame for first) give the partition minimum and the
     # next-j neighbors on every row; stage them as plain columns
     # first, then build edge structs (HOFs can't hold window exprs).
-    sel_cols = [
-        F.col(id_col).alias("_id"),
-        F.first(F.col(id_col)).over(w).alias("_f1"),
-    ]
-    if payload is not None:
-        sel_cols += [
-            F.col(payload).alias("_p"),
-            F.first(F.col(payload)).over(w).alias("_fp1"),
-        ]
+    sel_cols = [*keys, "_id", F.first("_id").over(w).alias("_f1")]
+    if pl:
+        sel_cols += ["_p", F.first("_p").over(w).alias("_fp1")]
     # star_k > 1: the s-th smallest id via nth_value over the same
     # running frame (null until s rows are in frame — the id_a < id_b
     # filter below also discards the self-row case).
     for s in range(2, star_k + 1):
-        sel_cols.append(
-            F.nth_value(F.col(id_col), s).over(w).alias(f"_f{s}"))
-        if payload is not None:
-            sel_cols.append(
-                F.nth_value(F.col(payload), s).over(w).alias(f"_fp{s}"))
+        sel_cols.append(F.nth_value("_id", s).over(w).alias(f"_f{s}"))
+        if pl:
+            sel_cols.append(F.nth_value("_p", s).over(w).alias(f"_fp{s}"))
     for j in range(1, ring_c + 1):
-        sel_cols.append(F.lead(F.col(id_col), j).over(w).alias(f"_l{j}"))
-        if payload is not None:
-            sel_cols.append(F.lead(F.col(payload), j).over(w).alias(f"_lp{j}"))
-    sel = over_rows.select(*sel_cols)
+        sel_cols.append(F.lead("_id", j).over(w).alias(f"_l{j}"))
+        if pl:
+            sel_cols.append(F.lead("_p", j).over(w).alias(f"_lp{j}"))
+    sel_cols.append(F.count(F.lit(1)).over(whole).alias("_n"))
+    sel = base.select(*sel_cols)
 
     def edge(aid, bid, apl=None, bpl=None):
         fields = [aid.alias("id_a"), bid.alias("id_b")]
-        if payload is not None:
+        if pl:
             fields += [apl.alias("pa"), bpl.alias("pb")]
         return F.struct(*fields)
 
+    own_p = F.col("_p") if pl else None
     edges = [edge(F.col(f"_f{s}"), F.col("_id"),
-                  F.col(f"_fp{s}") if payload is not None else None,
-                  F.col("_p") if payload is not None else None)
+                  F.col(f"_fp{s}") if pl else None, own_p)
              for s in range(1, star_k + 1)]
     for j in range(1, ring_c + 1):
         edges.append(edge(F.col("_id"), F.col(f"_l{j}"),
-                          F.col("_p") if payload is not None else None,
-                          F.col(f"_lp{j}") if payload is not None else None))
+                          own_p, F.col(f"_lp{j}") if pl else None))
+    # A second window over the same partitioning and order (no new
+    # exchange or sort) collects an under-cap bucket's members; each row
+    # pairs with the larger ones.
+    under = F.col("_n") <= max_bucket
+    member = F.struct(F.col("_id").alias("i"), *([own_p.alias("p")] if pl else []))
+    sel = sel.withColumn("_b", F.collect_list(F.when(under, member)).over(whole))
+    pairs = F.transform(
+        F.filter("_b", lambda m: m["i"] > F.col("_id")),
+        lambda m: edge(F.col("_id"), m["i"], own_p, m["p"] if pl else None))
+    emit = F.when(under, pairs).otherwise(F.array(*edges))
     return (
-        sel.select(F.explode(F.array(*edges)).alias("e"))
+        sel.select(F.explode(emit).alias("e"))
         .filter(F.col("e.id_b").isNotNull()
                 & (F.col("e.id_a") < F.col("e.id_b")))
         .select("e.*")
@@ -579,7 +555,9 @@ def minhash_lsh_pairs(
     capture at Jaccard ≈ (1/16)^(1/4) ≈ 0.5.
     Output: (id_a, id_b) with id_a < id_b, distinct.
 
-    Pairing is ONE shuffle: group ids per (band, bucket) with
+    Pairing is ONE shuffle.  Under the default ``over_cap="ring"`` it
+    is the window pass of ``_ring_pairs`` (see there).  Under
+    ``"drop"``: group ids per (band, bucket) with
     collect_list, drop degenerate buckets (a bucket of n docs yields
     n² pairs; at scale one boilerplate bucket would dominate the job),
     expand pairs with array ops inside the bucket row.  This replaces
@@ -608,8 +586,9 @@ def minhash_lsh_pairs(
     docstring and SCALE.md's DESIGN note) — each doc pairs with its
     next ``ring_c`` bucket-neighbors in ascending-id order plus the
     bucket's min id (O(n·(ring_c+1)) pairs, bucket connectivity at
-    diameter ≤ 2 for a downstream bounded-round connected-components
-    pass; see ``_ring_pairs``) — or ``"drop"`` (legacy opt-out: no
+    diameter ≤ 2; see ``_ring_pairs``, which also emits the under-cap
+    buckets' pairs in the same window pass) — or ``"drop"`` (legacy
+    opt-out: no
     pairs, bounded cost, recall loss on degenerate clusters).
     ``"ring"`` subsumes the two-pass guard (over-cap rows never
     reach the collect accumulator), so combining it with
@@ -629,38 +608,31 @@ def minhash_lsh_pairs(
     # exact/normalized dedup, not minhash.
     sigs = sigs.filter(F.element_at("minhash", 1).isNotNull())
 
-    def band_key(b: int):
-        slots = [
-            F.element_at("minhash", b * rows_per_band + r + 1)
-            for r in range(rows_per_band)
-        ]
-        if hash_src == "md5":
-            # Bucket on the raw slot tuple, not a hash of it: a (2^-64)
-            # band_hash collision would merge two buckets and perturb the
-            # candidate set / bucket cap vs the DuckDB oracle's exact
-            # tuple grouping.  Array group keys shuffle 4 bigints instead
-            # of 1 — negligible, and the semantics are collision-free.
-            return F.array(*slots).alias("band_hash")
-        return F.xxhash64(*slots).alias("band_hash")
-
+    # Every band key from ONE SQL expression: built Column by Column,
+    # the per-band structs cost about 200 py4j calls, 0.2 s of driver
+    # time per call.  Band b hashes slots b*r+1 .. b*r+r.
+    r = rows_per_band
+    if hash_src == "md5":
+        # Bucket on the raw slot tuple, not a hash of it: a (2^-64)
+        # band_hash collision would merge two buckets and perturb the
+        # candidate set / bucket cap vs the DuckDB oracle's exact
+        # tuple grouping.  Array group keys shuffle 4 bigints instead
+        # of 1 — negligible, and the semantics are collision-free.
+        key = f"slice(minhash, b * {r} + 1, {r})"
+    else:
+        key = "xxhash64({})".format(", ".join(
+            f"element_at(minhash, b * {r} + {j})" for j in range(1, r + 1)))
     banded = sigs.select(
         F.col(id_col),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(b).alias("band"), band_key(b))
-                    for b in range(bands)
-                ]
-            )
-        ).alias("bh"),
+        F.explode(F.expr(
+            f"transform(sequence(0, {bands - 1}), "
+            f"b -> named_struct('band', b, 'band_hash', {key}))"
+        )).alias("bh"),
     ).select(id_col, "bh.band", "bh.band_hash")
-    ring = None
     if over_cap == "ring":
-        banded, over_rows = _split_over_cap(
-            banded, ["band", "band_hash"], id_col, max_bucket)
-        ring = _ring_pairs(over_rows, ["band", "band_hash"], id_col, ring_c,
-                           star_k=star_k)
-    elif cap_bucket_prepass:
+        return _ring_pairs(banded, ["band", "band_hash"], id_col, ring_c,
+                           star_k=star_k, max_bucket=max_bucket).distinct()
+    if cap_bucket_prepass:
         over = (
             banded.groupBy("band", "band_hash")
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -687,10 +659,7 @@ def minhash_lsh_pairs(
             )
         ).alias("p")
     )
-    out = pairs.select("p.id_a", "p.id_b")
-    if ring is not None:
-        out = out.unionByName(ring)
-    return out.distinct()
+    return pairs.select("p.id_a", "p.id_b").distinct()
 
 
 def jaccard_sets(ta: Column, tb: Column) -> Column:
@@ -842,162 +811,124 @@ def minhash_verify_scores(
 
 def connected_components(
     pairs: DataFrame, max_iter: int = 20, id_a: str = "id_a", id_b: str = "id_b",
-    unroll: int = 1,
 ) -> DataFrame:
     """Cluster ids for the near-duplicate pair graph: every vertex gets
-    the minimum id reachable from it (label propagation to fixpoint).
+    the minimum id of its connected component.
 
     This is the standard last step of web-scale dedup — LSH emits
     *pairs*, but keep/drop decisions need *clusters* (A~B, B~C ⇒ keep
-    one of {A,B,C}).  Implementation is iterative min-label exchange:
-    each round, every vertex adopts min(own label, neighbors' labels);
-    rounds needed = graph diameter, which for near-dup clusters is
-    tiny (chains of copies), so ``max_iter`` is a safety bound not a
-    practical limit.  Each round is one shuffle (groupBy vertex);
-    results are cached + localCheckpointed to keep the plan from
-    growing O(iterations) deep — the classic iterative-Spark trap.
+    one of {A,B,C}).
 
-    Input: distinct undirected edges (id_a, id_b).  Output:
-    (id, cluster_id) for every vertex appearing in any edge, where
-    cluster_id = min vertex id of its component.
+    Algorithm: the alternating large-star / small-star steps of Kiveris
+    et al., "Connected Components in MapReduce and Beyond" (SoCC 2014),
+    with m(u) = min(u, neighbors of u).  Each step rewires the edge set
+    and keeps every component connected:
+
+    - large-star: each vertex u links each of its larger neighbors to
+      m(u);
+    - small-star: each vertex v links itself and each of its smaller
+      neighbors to the least of them.
+
+    The fixpoint is a star forest centered on each component's minimum,
+    reached in O(log n) steps (O(log² n) proven).  In a Python model of
+    these rounds, paths of up to 3000 vertices with shuffled ids took
+    at most ⌈log2 n⌉ rounds; label propagation needs one round per hop
+    of the graph's diameter, and label propagation with pointer jumping
+    still needed hundreds of rounds on a 1000-vertex shuffled path.
+
+    Round 1 is a large-star over ``pairs``; each later round is a
+    small-star then a large-star.  A round is ONE action: its edges are
+    checkpointed eagerly, and ``DataFrame.observe`` on that checkpoint
+    counts the vertices that still break the star-forest shape (two
+    smaller neighbors, or a smaller and a larger one), so no probe job
+    runs and the round that reaches the fixpoint is the last.  Each
+    round moves the edge table through two exchanges keyed by vertex.
+
+    Input: undirected edges (id_a, id_b).  Output: (id, cluster_id) for
+    every vertex appearing in any edge, where cluster_id = min vertex
+    id of its component.  Raises ``RuntimeError`` if ``max_iter``
+    rounds end short of the fixpoint, instead of returning labels that
+    are not component minima.
+
+    The checkpoint's plan statistics are the round plan's estimate
+    from before it ran, so the output carries a broadcast hint when the
+    counted labels fit ``spark.sql.autoBroadcastJoinThreshold`` (at 24
+    bytes a row, the planner's own row size for two longs): the join
+    back to the documents then broadcasts them, as it would from exact
+    statistics.
 
     Checkpoint durability (r17, VERDICT r16 #3): when the session has
-    a checkpoint directory configured (``sc.setCheckpointDir``), the
-    per-round label truncation uses RELIABLE ``checkpoint()`` —
+    a checkpoint directory configured (``sc.setCheckpointDir``), each
+    round uses RELIABLE ``checkpoint()`` —
     on a real cluster an executor loss mid-loop then recomputes from
     checkpointed state instead of killing the job.  Without one it
     falls back to ``localCheckpoint`` (executor-local blocks), the
     right trade in local mode where executor==driver and reliable
     checkpointing would just pay an extra write to disk.
-
-    ``unroll`` (r17, VERDICT r16 #3 "probe-free rounds"): the first
-    ``unroll`` rounds run WITHOUT a per-round convergence probe — one
-    lazy chain, lineage truncated every 2 rounds, materialized by a
-    single action whose probe reads the LAST round's change flag.  A
-    driver probe per round costs a full job launch + an AQE re-plan
-    (~0.4-0.5 s each locally; measured q212 3.09 -> 2.31 s at
-    unroll=6), which dwarfs the round's actual compute on dedup-sized
-    graphs.  ``unroll`` is a pure PERFORMANCE hint, never a
-    correctness bound: extra rounds past the fixpoint are no-ops
-    under the min() update rule, and if round ``unroll`` still
-    changed labels the probing loop below continues to the true
-    fixpoint — so an underestimate degrades to the old
-    probe-per-round behavior, never to a wrong answer.  Callers pick
-    it from their candidate topology (star keeps bucket diameter <= 2
-    => 2; star2's cross-bucket chains measured 6-8 rounds across SFs
-    => 6).  Lineage still truncates INSIDE the block (every 2 rounds
-    — one round's plan nests the previous round's otherwise:
-    measured 17.7 s for a 6-round single-lineage chain vs 2.3 s
-    truncated), so plan depth stays bounded regardless of ``unroll``.
     """
+    from pyspark.sql import Observation, Window
+
     spark = pairs.sparkSession
     try:
         reliable = spark.sparkContext.getCheckpointDir() is not None
     except Exception:
         reliable = False
+    src, dst, mn = F.col("src"), F.col("dst"), F.col("mn")
 
-    def _ckpt(df: DataFrame, eager: bool = True) -> DataFrame:
-        return df.checkpoint(eager=eager) if reliable else df.localCheckpoint(eager=eager)
+    def undirected(df: DataFrame, a: Column, b: Column) -> DataFrame:
+        # Both orientations of each (a, b) edge, distinct, partitioned
+        # by ``src``, with src's least neighbor ``mn`` and whether src
+        # breaks the star-forest shape.  Self-loops ride along: they
+        # keep a loop-only vertex in the output and change neither
+        # least(src, mn) nor ``bad``.
+        w = Window.partitionBy("src")
+        e = df.select(F.explode(F.array(
+            F.struct(a.alias("src"), b.alias("dst")),
+            F.struct(b.alias("src"), a.alias("dst")),
+        )).alias("e")).select("e.*").repartition("src").distinct()
+        least = F.min(dst).over(w)
+        bad = (F.count(F.when(dst < src, 1)).over(w) > 1) | (
+            (least < src) & (F.max(dst).over(w) > src))
+        return e.select(src, dst, least.alias("mn"), bad.alias("bad"))
 
-    # Both orientations from ONE pass over ``pairs`` — a 2-branch
-    # union would compute the (expensive: LSH + verify) pair pipeline
-    # twice before this cache even fills.  Cached pre-partitioned on
-    # ``src``, the per-round join key: every round's contribution join
-    # then reuses the cached distribution instead of re-exchanging the
-    # edge table (guide §2.4 — two operations keyed the same way share
-    # one exchange), so only the (vertex-sized) label table moves per
-    # round once labels outgrow the broadcast threshold.
-    edges = (
-        pairs.select(
-            F.explode(
-                F.array(
-                    F.struct(F.col(id_a).alias("src"), F.col(id_b).alias("dst")),
-                    F.struct(F.col(id_b).alias("src"), F.col(id_a).alias("dst")),
-                )
-            ).alias("e")
-        )
-        .select("e.src", "e.dst")
-        .distinct()
-        .repartition("src")
-        .cache()
-    )
-    labels = _ckpt(
-        edges.select(F.col("src").alias("id"))
-        .distinct()
-        .withColumn("label", F.col("id"))
-    )
-    label_t = labels.schema["label"].dataType.simpleString()
-
-    def _round(labels: DataFrame) -> DataFrame:
-        # One round = ONE join + ONE aggregate (r16; was join + agg +
-        # left-join = 3 exchanges + 2 sorts + an SMJ per round): each
-        # vertex's new label is min over {own label} ∪ {in-neighbor
-        # labels}, computed by unioning the label table (tagged with
-        # its own label in ``_own``) with the per-edge contributions
-        # and taking one grouped min.  Identical update rule, so the
-        # round-by-round label sequence — and therefore the fixpoint
-        # AND the round count — are unchanged.  The result carries a
-        # per-row `chg` flag (label strictly decreased) so whichever
-        # action eventually materializes the round can also answer
-        # whether anything changed.
-        contrib = (
-            edges.join(labels, edges.src == labels.id)
-            .select(
-                F.col("dst").alias("id"), "label",
-                F.lit(None).cast(label_t).alias("_own"),
-            )
-        )
-        return (
-            labels.select("id", "label", F.col("label").alias("_own"))
-            .unionByName(contrib)
-            .groupBy("id")
-            .agg(F.min("label").alias("label"), F.min("_own").alias("_old"))
-            .select("id", "label", (F.col("label") < F.col("_old")).alias("chg"))
-        )
-
-    # Probe-free block: the first `unroll` rounds chain lazily and run
-    # under ONE action (the probe on the LAST round's chg flag);
-    # lineage truncates every 2 rounds so plan depth stays bounded.
-    block = max(1, min(unroll, max_iter))
-    new_labels = labels
-    for j in range(block):
-        new_labels = _round(labels)
-        if j % 2 == 1 or j == block - 1:
-            new_labels = _ckpt(new_labels, eager=False)
-        labels = new_labels.select("id", "label")
-    changed = new_labels.agg(F.max("chg")).first()[0]
-    # Fallback probing loop: only reached when round `block` still
-    # changed labels — i.e. `unroll` under-estimated this input's
-    # convergence depth.  One job per round, exactly the pre-unroll
-    # behavior.
-    for _ in range(block, max_iter):
-        if not changed:
-            break
-        new_labels = _ckpt(_round(labels), eager=False)
-        changed = new_labels.agg(F.max("chg")).first()[0]
-        labels = new_labels.select("id", "label")
-    edges.unpersist()
-    return labels.select(F.col("id"), F.col("label").alias("cluster_id"))
+    g = undirected(pairs, F.col(id_a), F.col(id_b))
+    for r in range(max_iter):
+        if r:
+            # small-star: least(src, mn) is the least of src and its
+            # smaller neighbors.
+            g = undirected(g.filter(dst <= src).select(
+                F.explode(F.array(src, dst)).alias("v"),
+                F.least(src, mn).alias("m"),
+            ), F.col("v"), F.col("m"))
+        # large-star
+        g = undirected(g.filter(dst >= src), dst, F.least(src, mn))
+        obs = Observation()
+        g = g.observe(obs, F.count(F.when(F.col("bad"), 1)).alias("bad"),
+                      F.count(F.when(dst == mn, 1)).alias("n"))
+        g = g.checkpoint(eager=True) if reliable else g.localCheckpoint(eager=True)
+        seen = obs.get
+        if seen["bad"] == 0:
+            labels = g.filter(dst == mn).select(
+                src.alias("id"), F.least(src, mn).alias("cluster_id"))
+            limit = spark._jsparkSession.sessionState().conf().autoBroadcastJoinThreshold()
+            return labels.hint("broadcast") if 0 <= seen["n"] * 24 <= limit else labels
+    raise RuntimeError(
+        f"connected_components: no fixpoint after max_iter={max_iter} rounds")
 
 
 def dedup_keep_list(
     df: DataFrame, threshold: float = 0.6, text_col: str = "text", id_col: str = "doc_id",
-    cc_unroll: int = 2, **kwargs,
+    **kwargs,
 ) -> DataFrame:
     """End-to-end near-dedup: MinHash LSH pairs → verify → clusters →
     one keeper (min id) per cluster.  Output: (doc_id, cluster_id,
-    keep) for every document; singletons keep themselves.
-
-    ``cc_unroll`` forwards to ``connected_components(unroll=...)`` — a
-    probe-free-rounds performance hint (never a correctness bound; see
-    there).  Default 2 fits the ring+star candidate topology, whose
-    star edges pin each bucket's pair-graph diameter at <= 2 (one
-    changing round + the confirming round, measured 2 rounds at every
-    SF for q54/q210); star2 callers pass their measured depth."""
+    keep) for every document; singletons keep themselves.  The
+    clustering runs ``connected_components``' O(log n) rounds, so its
+    cost does not depend on how deep the verified clusters chain."""
     pairs = minhash_dedup_pairs_verified(
         df, threshold=threshold, text_col=text_col, id_col=id_col, **kwargs
     )
-    clusters = connected_components(pairs, unroll=cc_unroll)
+    clusters = connected_components(pairs)
     all_ids = df.select(F.col(id_col))
     labeled = (
         all_ids.join(clusters, all_ids[id_col] == clusters.id, "left")
@@ -1157,19 +1088,18 @@ def simhash_near_pairs(
         id_col, "simhash",
         F.explode(F.array(*[F.struct(F.lit(p).alias("p"), parts[p]) for p in range(4)])).alias("b"),
     ).select(id_col, "simhash", "b.p", "b.k")
-    ring = None
     if over_cap == "ring":
-        # Shared ring+star topology with the simhash riding along as
-        # the window payload, so Hamming verifies in-row (no re-join).
-        banded, over_rows = _split_over_cap(banded, ["p", "k"], id_col, max_bucket)
-        ring = _ring_pairs(
-            over_rows, ["p", "k"], id_col, ring_c, payload="simhash",
-            star_k=star_k,
+        # Shared bucket topology with the simhash riding along as the
+        # window payload, so Hamming verifies in-row (no re-join).
+        pairs = _ring_pairs(
+            banded, ["p", "k"], id_col, ring_c, payload="simhash",
+            star_k=star_k, max_bucket=max_bucket,
         ).select(
             "id_a", "id_b",
             F.bit_count(F.col("pa").bitwiseXOR(F.col("pb"))).alias("hamming"),
         )
-    elif cap_bucket_prepass:
+        return pairs.filter(F.col("hamming") <= max_hamming).distinct()
+    if cap_bucket_prepass:
         over = (
             banded.groupBy("p", "k")
             .agg(F.count(F.lit(1)).alias("_n"))
@@ -1204,6 +1134,4 @@ def simhash_near_pairs(
             )
         ).alias("p")
     ).select("p.id_a", "p.id_b", "p.hamming")
-    if ring is not None:
-        pairs = pairs.unionByName(ring)
     return pairs.filter(F.col("hamming") <= max_hamming).distinct()

@@ -83,9 +83,8 @@ _TOUCHED_THIS_ROUND: tuple[str, ...] = (
     # r17 crossing-bin prefix sum for the weighted median — output-
     # identical, restructured plan (no rank window anywhere).
     "q186_weighted_median",
-    # r17 connected_components probe-free unroll (a performance hint,
-    # never a correctness bound — fixpoint unchanged): every registry
-    # path through CC.
+    # connected_components as large-star/small-star rounds (same
+    # fixpoint, restructured plan): every registry path through CC.
     "q54_dedup_keep_list",
     "q210_keep_list_ring",
     "q212_keep_list_star2",

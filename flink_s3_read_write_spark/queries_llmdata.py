@@ -417,9 +417,9 @@ def q33_minhash_dedup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # max_bucket emit ring+star candidates — each doc vs its next
     # ring_c bucket-neighbors in ascending-id order PLUS the bucket's
     # min id — instead of nothing, so degenerate duplicate clusters
-    # stay connected (diameter ≤ 2 via the star edges) for a
-    # downstream bounded-round connected-components pass, at
-    # O(n·(ring_c+1)) cost.  max_bucket=2 is
+    # stay connected (diameter ≤ 2 via the star edges) for the
+    # downstream connected-components pass, at O(n·(ring_c+1))
+    # cost.  max_bucket=2 is
     # deliberately tiny so the over-cap path EXECUTES at gate SF
     # (measured bucket sizes reach 3 at sf0.01 / 4 at sf0.1); the
     # production knob stays 50, and since r14 ring IS the production
@@ -1124,10 +1124,10 @@ def q56_corpus_curation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "End-to-end near-dedup decision: MinHash LSH candidates -> exact "
         "shingle-Jaccard >= 0.9 verify (integer cross-multiplication, the "
         "same 3-word shingle sets the signatures hash) -> connected "
-        "components (iterative min-label propagation) -> one keeper per "
+        "components (large-star/small-star rounds) -> one keeper per "
         "duplicate cluster. Output (doc_id, cluster_id, keep) for every "
         "document. Scale: LSH banding bounds candidates, CC rounds = "
-        "cluster diameter (tiny for near-dup graphs); the oracle's "
+        "O(log n) in the cluster size, one action each; the oracle's "
         "brute-force inverted-index twin is feasible only at oracle SF. "
         "Candidates and shingle sets come from the shared cached "
         "builders (minhash_candidates / doc_shingle_sets), so the "
@@ -1153,16 +1153,15 @@ def q54_dedup_keep_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ring policy with the over-cap path FORCED at gate SF
     # (max_bucket=2, like q208/q209): LSH candidates (bucket pairs +
     # ring+star in over-cap buckets) -> exact token-Jaccard >= 0.5
-    # verify -> bounded-round connected components -> one keeper per
+    # verify -> connected components -> one keeper per
     # cluster.  This is the r13 VERDICT item 2 closure: the exact
     # mine->verify->cluster->keep chain a 100 TB curation run executes
     # now has the recall-preserving policy oracle-checked END TO END,
     # not just at the pair stage.  The oracle replays candidates (ring
     # branches as window leads/first_value, q208's cand), verify, then
-    # the transitive closure by recursive CTE — Spark's min-label
-    # propagation computes components of the SAME verified edge set,
-    # and the star edges bound every over-cap bucket's diameter at 2,
-    # so the bounded rounds provably converge.
+    # the transitive closure by recursive CTE — Spark's large-star/
+    # small-star rounds compute components of the SAME verified edge
+    # set, and raise rather than return a non-fixpoint.
     oracle=f"""
     WITH RECURSIVE sh AS (
       SELECT doc_id, CASE WHEN len(toks) >= 3 THEN
@@ -1429,13 +1428,13 @@ def q211_minhash_star2_overcap(spark: SparkSession, sf_dir: str) -> DataFrame:
     "q212_keep_list_star2",
     # The q210 composite under star_k=2: candidates (incl. the
     # nth_value star-2 branch) -> exact token-Jaccard >= 1/2 verify ->
-    # bounded-round connected components -> one keeper per cluster.
+    # connected components -> one keeper per cluster.
     # This is the production shape for pipelines that opt into the
     # hub-marginal fix (SCALE.md r14: eligible-split clusters 14 -> 0
     # at star_k=2, measured at 100x) — now oracle-checked end to end.
-    # Convergence: star-1 + star-2 edges keep every over-cap bucket's
-    # candidate graph at diameter <= 2, so the bounded-round CC
-    # argument of q210 carries over unchanged.
+    # Its verified graph chains across buckets: label propagation
+    # took 6-8 rounds at sf0.001-sf0.1, connected_components' O(log n)
+    # rounds take 3.
     oracle=f"""
     WITH RECURSIVE {_STAR2_CAND_CTES},
     tok AS (
@@ -1480,11 +1479,6 @@ def q212_keep_list_star2(spark: SparkSession, sf_dir: str) -> DataFrame:
         load_table(spark, sf_dir, "documents"),
         threshold=0.5,
         threshold_frac=(1, 2),
-        # star2's cross-bucket chains converge deeper than the ring+star
-        # default: measured 6-8 label rounds across sf0.001/0.01/0.1, so
-        # unroll 6 probe-free rounds (a hint — the probing fallback
-        # continues to the exact fixpoint when an input needs more)
-        cc_unroll=6,
         **STAR2_KW,
         cand=star2_candidates(spark, sf_dir),
         toks=doc_token_sets(spark, sf_dir),

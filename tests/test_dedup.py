@@ -271,22 +271,68 @@ def test_connected_components_chains_and_islands(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 10: 10, 11: 10, 20: 20, 21: 20}
 
 
-def test_connected_components_unroll_is_a_hint_not_a_bound(spark):
-    """r17 probe-free unroll: every `unroll` value — underestimate (the
-    probing fallback must carry a deep chain to the true fixpoint),
-    exact, and overestimate (extra rounds are no-ops under min()) —
-    yields the identical fixpoint as the probe-every-round baseline.
-    A 12-vertex path graph needs 11 propagation rounds, far past any
-    unroll hint used by the callers."""
-    chain = [(i, i + 1) for i in range(1, 12)]  # path 1-2-...-12
+def test_connected_components_log_rounds_on_a_long_path(spark):
+    """A 64-vertex path with shuffled ids (diameter 63) reaches exact
+    component-minimum labels within 2*ceil(log2 n)+2 rounds — label
+    propagation would need a round per hop — and an exhausted
+    ``max_iter`` raises instead of returning labels that are not
+    component minima."""
+    import math
+    import random
+
+    n = 64
+    ids = list(range(100, 100 + n))
+    random.Random(13).shuffle(ids)
+    chain = [(ids[i], ids[i + 1]) for i in range(n - 1)]
     pairs = spark.createDataFrame(chain + [(30, 31)], "id_a long, id_b long")
-    want = {r["id"]: r["cluster_id"]
-            for r in D.connected_components(pairs, unroll=1).collect()}
-    assert want == {**{i: 1 for i in range(1, 13)}, 30: 30, 31: 30}
-    for unroll in (2, 6, 11, 12, 40):
-        got = {r["id"]: r["cluster_id"]
-               for r in D.connected_components(pairs, unroll=unroll).collect()}
-        assert got == want, unroll
+    bound = 2 * math.ceil(math.log2(n)) + 2
+    got = {r["id"]: r["cluster_id"]
+           for r in D.connected_components(pairs, max_iter=bound).collect()}
+    assert got == {**{i: 100 for i in ids}, 30: 30, 31: 30}
+    with pytest.raises(RuntimeError, match="max_iter=1 "):
+        D.connected_components(pairs, max_iter=1)
+
+
+def test_ring_candidates_compute_signatures_once(docs):
+    """The ring policy emits under-cap bucket pairs and over-cap
+    ring+star pairs from one window pass over one bucket exchange, so
+    the signature stage appears once in the plan — the split into two
+    branches carried it twice, with no exchange reuse."""
+    import re
+
+    from flink_s3_read_write_spark.plans import inspect as P
+
+    for engine in ("numpy", "catalyst"):
+        plan = P.formatted_plan(
+            D.minhash_lsh_pairs(docs, over_cap="ring", engine=engine))
+        nodes = re.findall(r"^\(\d+\) (\w+)", plan, re.MULTILINE)
+        if engine == "numpy":
+            assert nodes.count("MapInPandas") == 1, plan
+        assert nodes.count("Exchange") == 2, plan  # bucket key, distinct
+        assert "Union" not in nodes, plan
+
+
+def test_q54_spark_jobs_per_call(spark, sf_dir):
+    """One q54 call from released shared builders, executed: the
+    builder fills, the verify, the connected-components rounds and the
+    join back to every document.  Measured 24 jobs on sf0.001 before
+    the signature stage ran once per fill and connected components
+    became self-probing large-star/small-star rounds; 14 after."""
+    from flink_s3_read_write_spark import queries_llmdata as QL
+    from flink_s3_read_write_spark.session import release_shared_builders
+
+    sc = spark.sparkContext
+    release_shared_builders(spark)
+    group = "test-q54-jobs"
+    sc.setJobGroup(group, group)
+    try:
+        assert len(QL.q54_dedup_keep_list(spark, sf_dir).collect()) > 0
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+        release_shared_builders(spark)
+    n = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert n <= 14, n
 
 
 def test_connected_components_reliable_checkpoint(spark, tmp_path):
