@@ -215,7 +215,8 @@ def minhash_signatures(
     permutation — O(perms·shingles·|doc|) instead of O(|doc| +
     perms·shingles).  Chained Projects over expensive multiply-used
     aliases are kept separate by Catalyst (CollapseProject's cheap/
-    used-once rule), so each stage computes once per row.
+    used-once rule), so each stage computes once per row.  A filter
+    on the output is kept above them (``_filter_fence``).
     """
 
     def mix(h, j: int):
@@ -266,7 +267,7 @@ def minhash_signatures(
                 for j in range(num_perm)
             ]
         )
-        return hashed.select(F.col(id_col), sig.alias("minhash"))
+        return _filter_fence(hashed.select(F.col(id_col), sig.alias("minhash")), id_col)
     hashed = shingled.select(
         F.col(id_col),
         F.transform(F.col("_sh"), lambda s: F.xxhash64(s)).alias("_h"),
@@ -277,7 +278,24 @@ def minhash_signatures(
             for j in range(num_perm)
         ]
     )
-    return hashed.select(F.col(id_col), sig.alias("minhash"))
+    return _filter_fence(hashed.select(F.col(id_col), sig.alias("minhash")), id_col)
+
+
+def _filter_fence(sigs: DataFrame, id_col: str) -> DataFrame:
+    """``sigs`` behind a Generate, which a filter on ``minhash`` does
+    not cross.
+
+    Catalyst pushes a filter through a Project by replacing each alias
+    with its definition, down to the scan.  A filter on the signature
+    (``minhash_lsh_pairs`` drops all-null ones) thus carried the whole
+    signature below the staged projections, with ``tokens()`` inlined
+    into the shingle lambda: its regexes re-ran once per shingle, and
+    the catalyst engine did not finish sf0.01's 500 documents in 100 s.
+    A predicate on a generator's output stays above the Generate, so
+    exploding a one-element array keeps the filter on the computed
+    column.
+    """
+    return sigs.select(F.col(id_col), F.explode(F.array("minhash")).alias("minhash"))
 
 
 def minhash_signatures_numpy(

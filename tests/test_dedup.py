@@ -386,6 +386,19 @@ def test_numpy_signatures_bit_identical_to_catalyst(spark, sf_dir):
     assert a == b
 
 
+@pytest.mark.parametrize("hash_src", ["xxhash64", "md5"])
+def test_catalyst_lsh_tokenizes_each_document_once(spark, sf_dir, hash_src):
+    """The null-signature filter of ``minhash_lsh_pairs`` must not be
+    pushed below the signature: there it inlined ``tokens()`` into the
+    shingle lambda, whose regexes then re-ran once per shingle."""
+    from flink_s3_read_write_spark.sources.io import load_table
+
+    docs = load_table(spark, sf_dir, "documents")
+    pairs = D.minhash_lsh_pairs(docs, engine="catalyst", hash_src=hash_src)
+    plan = pairs._jdf.queryExecution().optimizedPlan().toString()
+    assert plan.count("split(") == 1
+
+
 def test_minhash_permutations_are_independent(spark):
     """Regression for the degenerate affine family: with a real
     permutation family, a pair with partial shingle overlap matches
